@@ -544,6 +544,33 @@ class PostingsIndex:
         terms would leave their df over-counted, silently
         UNDER-estimating the MAXSCORE bound. The sync paths satisfy
         it by construction (the index follows the table)."""
+        ids: list = []
+        if replace and self.postings_t.current_version() is not None:
+            ids = [
+                r["doc_id"]
+                for r in docs.select(
+                    F.col(self.id_col).alias("doc_id")
+                ).distinct().collect()
+            ]
+        return self._apply(docs, ids, mode=mode, before=replaced_old)
+
+    def _apply(
+        self,
+        docs: DataFrame | None,
+        remove_ids,
+        mode: str = "mor",
+        before: DataFrame | None = None,
+    ) -> int | None:
+        """The one mutation pass behind :meth:`add` and :meth:`remove`:
+        delete ``remove_ids`` (one merge-on-read predicate delete each
+        on postings and doc_stats, one removal-stats refresh), then
+        insert ``docs`` (None = remove only), then ONE corpus-stats
+        refresh over every doc bucket either side touched. A CDF sync
+        window passes its net deletes and its replaced ids together,
+        so a window pays one removal pass, not two. ``before``: the
+        removed ids' last indexed content (``replaced_old`` /
+        ``removed_docs``). Returns the postings version of the insert
+        commit, or None for a remove-only pass."""
         # Captured BEFORE any commit bumps versions: the scoped
         # (batch-terms-only) refresh below is only sound when the
         # prior stats state was provably consistent. If stats were
@@ -557,16 +584,14 @@ class PostingsIndex:
         # with a FULL refresh instead (see below).
         fresh_before = self._stats_fresh()
         corpus_fresh_before = self._corpus_fresh()
+        maintain_stats = self.stats_refresh == "add" and fresh_before
+        removing = (
+            bool(remove_ids) and self.postings_t.current_version() is not None
+        )
         removed_buckets: list[str] = []
-        if replace and self.postings_t.current_version() is not None:
-            ids = [
-                r["doc_id"]
-                for r in docs.select(
-                    F.col(self.id_col).alias("doc_id")
-                ).distinct().collect()
-            ]
-            # fresh-at-entry replace-adds maintain the removed ids'
-            # term stats incrementally, so pruning survives the whole
+        if removing:
+            # fresh-at-entry passes maintain the removed ids' term
+            # stats incrementally, so pruning survives the whole
             # replace cycle (the CDF-sync hot path); stale ones keep
             # the lean truncate + deferred-restore contract.
             #
@@ -574,30 +599,40 @@ class PostingsIndex:
             # in the NEW batch: the insert side's scoped refresh below
             # recomputes exactly the batch's vocabulary from the
             # post-add committed postings, which is the final truth
-            # for every shared term — recomputing them here first
-            # (against the mid-replace deleted state) is pure waste
-            # that the result never observes. A dropped term's state
-            # is identical before and after the add commit (the
-            # appended rows hold batch terms only), so the reduced
-            # removal refresh commits the same final stats bit for
-            # bit. This is the lever that keeps equal-vocabulary
-            # replace-adds — the streaming CDF hot path — free of a
-            # full changed-vocabulary postings recompute (r14 verdict
-            # next-round #2).
+            # for every shared term. Skipping them leaves those terms'
+            # stored df counting the removed docs until the insert
+            # commits, so the removal step never stamps the freshness
+            # record when an insert follows: the record stays stale
+            # (serving falls back to the exact plan) until the
+            # insert-side refresh certifies it, and a crash between
+            # the commits can only leave stats marked stale. A dropped
+            # term's state is identical before and after the add
+            # commit (the appended rows hold batch terms only), so the
+            # reduced removal refresh commits the same final stats bit
+            # for bit.
             removed_buckets = self._remove(
-                ids,
-                maintain_stats=(
-                    self.stats_refresh == "add" and fresh_before
-                ),
+                remove_ids,
+                maintain_stats=maintain_stats,
                 affected_terms=(
-                    self._terms_of(replaced_old)
-                    if replaced_old is not None
+                    self._terms_of(before) if before is not None else None
+                ),
+                recompute_exclude=(
+                    docs.select(
+                        F.explode(_tokens(self.text_col)).alias("term")
+                    ).distinct()
+                    if docs is not None
                     else None
                 ),
-                recompute_exclude=docs.select(
-                    F.explode(_tokens(self.text_col)).alias("term")
-                ).distinct(),
             )
+        if docs is None:
+            if removing and maintain_stats:
+                # nothing follows: the removal refresh IS the final
+                # state of every affected term
+                self._mark_stats_fresh()
+            self._refresh_corpus_stats(
+                removed_buckets, entry_fresh=corpus_fresh_before
+            )
+            return None
         plen = self._prefix_len()
         toks = docs.select(
             F.col(self.id_col).alias("doc_id"),
@@ -709,7 +744,7 @@ class PostingsIndex:
                 if (
                     self.stats_refresh == "add"
                     and fresh_before
-                    and not replace
+                    and not removing
                 ):
                     live_doc = live_partition_keys(
                         self.doc_stats_t._manifest()
@@ -753,24 +788,23 @@ class PostingsIndex:
                         )
                     elif fresh_before:
                         # fresh at entry: the scoped recompute of the
-                        # batch's terms certifies the table — on a
-                        # replace-add the removal side already
-                        # recomputed the removed ids' terms
-                        # incrementally (see _remove), so the only
-                        # stats this commit can have changed are the
-                        # batch's own
+                        # batch's terms certifies the table — the
+                        # removal step already recomputed the removed
+                        # ids' other terms incrementally (see _remove),
+                        # so the only stats still owed are the batch's
+                        # own
                         self._refresh_term_stats(
                             tbuckets, batch_terms=post
                         )
-                    elif not replace:
+                    elif not removing:
                         # stats were stale at entry: a scoped
                         # recompute can't certify the whole table, so
                         # restore from every live bucket — the same
                         # repair maintain() runs, pulled forward so
                         # the default mode keeps pruning always-live
                         self.refresh_term_stats()
-                    # stale replace-add: _remove just truncated the
-                    # stats — restoring here would put a full
+                    # stale pass with a removal: _remove just
+                    # truncated the stats — restoring here would put a full
                     # postings pass on the sync hot path; leave it to
                     # maintain()/refresh_term_stats(), the deferred
                     # contract (serving stays exact meanwhile)
@@ -1183,7 +1217,8 @@ class PostingsIndex:
         Caller contract: only invoke when the stats were provably
         fresh at mutation entry (the caller gates on that) — an
         incremental recompute cannot certify a table that was already
-        stale."""
+        stale. Never marks the stats fresh: the caller stamps the
+        record once its LAST commit landed (see :meth:`_apply`)."""
         terms = affected.select("term", "term_prefix").distinct()
         buckets = sorted(
             {
@@ -1195,8 +1230,7 @@ class PostingsIndex:
         )
         if not buckets:
             # the removed ids held no postings: stats content is
-            # unchanged — re-pair the record with the bumped versions
-            self._mark_stats_fresh()
+            # unchanged (the caller re-pairs the freshness record)
             return
         zeros = [
             F.lit(0).cast("long").alias(c)
@@ -1235,7 +1269,6 @@ class PostingsIndex:
             partition_scoped=True,
             assume_key_unique=True,
         )
-        self._mark_stats_fresh()
 
     def _terms_of(self, docs: DataFrame) -> DataFrame:
         """(term, term_prefix) vocabulary of an (id, text) frame at
@@ -1278,21 +1311,7 @@ class PostingsIndex:
         O(batch) — instead of scanning the postings for the ids'
         rows. CALLER-OWNED correctness (must match what the index
         holds; see :meth:`add`'s ``replaced_old``)."""
-        corpus_fresh_before = self._corpus_fresh()
-        buckets = self._remove(
-            doc_ids,
-            maintain_stats=(
-                self.stats_refresh == "add" and self._stats_fresh()
-            ),
-            affected_terms=(
-                self._terms_of(removed_docs)
-                if removed_docs is not None
-                else None
-            ),
-        )
-        self._refresh_corpus_stats(
-            buckets, entry_fresh=corpus_fresh_before
-        )
+        self._apply(None, list(doc_ids), before=removed_docs)
 
     def _remove(
         self,
@@ -1301,11 +1320,11 @@ class PostingsIndex:
         affected_terms: DataFrame | None = None,
         recompute_exclude: DataFrame | None = None,
     ) -> list[str]:
-        """:meth:`remove` minus the corpus-stats refresh — returns the
-        removed ids' live doc_stats bucket keys so ``add(replace=
-        True)`` can fold them into ITS refresh (one bucket scan
-        instead of two; a replaced doc whose NEW text is empty still
-        gets its bucket recounted that way). String ids escape both
+        """The removal step of :meth:`_apply`, minus the corpus-stats
+        refresh and the freshness stamp — returns the removed ids' live
+        doc_stats bucket keys so the pass folds them into ITS one
+        refresh (a replaced doc whose NEW text is empty still gets its
+        bucket recounted that way). String ids escape both
         quote and backslash — Spark's string literals are
         backslash-escaped, so quote-doubling alone would let an id
         like ``a\\`` swallow the quote and silently neuter the
@@ -1323,13 +1342,14 @@ class PostingsIndex:
 
         ``recompute_exclude`` (a ``term`` frame): terms whose stats
         the CALLER recomputes after its own following commit — the
-        replace-add passes its new batch's vocabulary, because the
+        pass hands in its insert batch's vocabulary, because the
         insert-side scoped refresh recomputes those terms from the
         final state anyway. Only affects which terms the incremental
-        removal refresh touches, never the deletes themselves."""
-        ids = list(doc_ids)
-        if not ids or self.postings_t.current_version() is None:
-            return []
+        removal refresh touches, never the deletes themselves. The
+        excluded terms' stored stats stay behind the postings until
+        that refresh, which is why this step never marks the stats
+        fresh: the caller certifies once its last commit landed."""
+        ids = list(doc_ids)  # non-empty, postings committed (see _apply)
 
         def lit(v) -> str:
             if isinstance(v, str):

@@ -31,6 +31,7 @@ import hashlib
 import json
 import os
 import tempfile
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -91,21 +92,29 @@ def _advance_cursor(index, table, version: int) -> None:
     os.replace(tmp, p)
 
 
+class _Net(NamedTuple):
+    """One sync window's net change-set (see :func:`_net_changes`)."""
+
+    upserts: DataFrame  # one after-image row per inserted/updated id
+    upsert_ids: list  # their ids
+    removed: list  # ids only on the delete side: net deletes
+    old: DataFrame  # before-images: the whole delete side
+
+
 def _net_changes(
     table, from_version: int, to_version: int, id_col: str
-) -> tuple[DataFrame, list, DataFrame]:
-    """(after-image rows of ids present in the target snapshot's
-    change set, ids to delete, BEFORE-image rows — the delete side of
-    the window). The removed-id collect is bounded by the mutation
-    size — the sync window's deleted keys — the same update-sized
-    contract the indexes' own ``remove`` documents; for corpus-scale
-    rewrites, rebuild instead of syncing. The before-images feed the
-    postings index's O(batch) removal-stats hint: under the
-    follower contract (the index tracks this table), a deleted row's
-    old content IS what the index holds for that id."""
-    # pin the two-snapshot diff ONCE: it is mutation-sized, and both
-    # the removed-ids collect and the caller's add would otherwise
-    # each re-run the full diff (the dominant sync cost)
+) -> _Net:
+    """The window's net change-set. The id collect is bounded by the
+    mutation size — the sync window's changed keys — the same
+    update-sized contract the indexes' own ``remove`` and replace-add
+    document; for corpus-scale rewrites, rebuild instead of syncing.
+    The before-images feed the postings index's O(batch)
+    removal-stats hint: under the follower contract (the index
+    tracks this table), a deleted row's old content IS what the
+    index holds for that id."""
+    # pin the two-snapshot diff ONCE: it is mutation-sized, and the
+    # id collect and the caller's add would otherwise each re-run the
+    # full diff (the dominant sync cost)
     ch = table.changes(from_version, to_version).localCheckpoint(eager=True)
     ins = ch.where(F.col("_change_type") == "insert").drop("_change_type")
     # one id can diff as several insert rows when the table holds
@@ -148,13 +157,18 @@ def _net_changes(
     old = ch.where(F.col("_change_type") == "delete").drop(
         "_change_type"
     )
-    removed = (
-        old.select(id_col)
-        .distinct()
-        .join(ins.select(id_col).distinct(), id_col, "left_anti")
-        .collect()
+    # ONE collect splits the window's ids: an id with an insert row
+    # is an upsert (its delete row, if any, is the update's
+    # before-image); an id with only delete rows is a net delete
+    ids = ch.groupBy(id_col).agg(
+        F.max((F.col("_change_type") == "insert").cast("int")).alias("i")
+    ).collect()
+    return _Net(
+        upserts,
+        [r[0] for r in ids if r[1]],
+        [r[0] for r in ids if not r[1]],
+        old,
     )
-    return upserts, [r[0] for r in removed], old
 
 
 def _window(index, table, from_version, to_version) -> tuple[int, int | None]:
@@ -173,6 +187,8 @@ def sync_postings_from_table(
     from_version: int | None = None,
     to_version: int | None = None,
     mode: str = "mor",
+    *,
+    _net: _Net | None = None,
 ) -> dict:
     """Bring a :class:`~datalake_toolkit_spark.llm.search.PostingsIndex`
     up to date with a LakeTable holding ``(id_col, text_col)`` rows.
@@ -182,10 +198,18 @@ def sync_postings_from_table(
     as one batch. Re-bootstrapping converges for every id IN the
     snapshot (replace-add semantics); index rows whose ids left the
     table before the bootstrap are NOT discovered — start from an
-    empty index, or sync from a real version. Updates apply as
-    replace-adds,
-    so postings for terms a new text dropped die instead of serving
-    stale; net deletes apply as merge-on-read predicate removes."""
+    empty index, or sync from a real version.
+
+    An incremental window is ONE mutation pass over the index: the
+    window's net deletes and its updated ids are deleted together
+    (one merge-on-read predicate delete per table, one removal-stats
+    refresh), then the after-images are inserted — so postings for
+    terms a new text dropped die instead of serving stale — and the
+    corpus stats refresh once over every touched bucket. The term
+    stats are certified fresh only after the insert; a crash inside
+    the pass leaves them marked stale (exact serving), never
+    stale-as-fresh. ``_net``: the window's change-set, already built
+    by :func:`sync_search_plane` for this same window (internal)."""
     from_v, to_v = _window(index, table, from_version, to_version)
     out = {"from_version": from_v, "to_version": to_v,
            "upserts": 0, "removes": 0}
@@ -208,31 +232,22 @@ def sync_postings_from_table(
         return out
     if from_v == to_v:
         return out
-    upserts, removed, old = _net_changes(
+    net = _net if _net is not None else _net_changes(
         table, from_v, to_v, index.id_col
     )
-    upserts = upserts.select(index.id_col, index.text_col)
-    old = old.select(index.id_col, index.text_col)
-    out["removes"] = len(removed)
-    if removed:
-        # the before-images ARE the removed ids' indexed content
-        # under the follower contract — O(batch) stats maintenance,
-        # no postings scan
-        index.remove(
-            removed,
-            removed_docs=old.where(
-                F.col(index.id_col).isin(removed)
-            ),
-        )
-    out["upserts"] = upserts.count()
-    if out["upserts"]:
-        index.add(
-            upserts,
+    out["removes"] = len(net.removed)
+    out["upserts"] = len(net.upsert_ids)
+    if net.removed or net.upsert_ids:
+        # the before-images ARE the removed and replaced ids' indexed
+        # content under the follower contract — O(batch) stats
+        # maintenance, no postings scan
+        index._apply(
+            net.upserts.select(index.id_col, index.text_col)
+            if net.upsert_ids
+            else None,
+            net.removed + net.upsert_ids,
             mode=mode,
-            replace=True,
-            replaced_old=old.join(
-                upserts.select(index.id_col), index.id_col, "left_semi"
-            ),
+            before=net.old.select(index.id_col, index.text_col),
         )
     _advance_cursor(index, table, to_v)
     return out
@@ -244,6 +259,8 @@ def sync_ivf_from_table(
     from_version: int | None = None,
     to_version: int | None = None,
     mode: str = "mor",
+    *,
+    _net: _Net | None = None,
 ) -> dict:
     """Bring an :class:`~datalake_toolkit_spark.llm.ann_index.IVFIndex`
     up to date with a LakeTable holding ``(id_col, vec_col)`` rows.
@@ -274,21 +291,24 @@ def sync_ivf_from_table(
         return out
     if from_v == to_v:
         return out
-    upserts, removed, _old = _net_changes(
+    net = _net if _net is not None else _net_changes(
         table, from_v, to_v, index.id_col
     )
-    upserts = upserts.select(index.id_col, index.vec_col)
-    indexable = index._prep(upserts)
-    demoted = (
-        upserts.select(F.col(index.id_col).alias("id"))
-        .join(indexable.select("id"), "id", "left_anti")
-        .collect()
-    )
-    removed = removed + [r[0] for r in demoted]
+    upserts = net.upserts.select(index.id_col, index.vec_col)
+    demoted = []
+    if net.upsert_ids:
+        indexable = index._prep(upserts)
+        demoted = [
+            r[0]
+            for r in upserts.select(F.col(index.id_col).alias("id"))
+            .join(indexable.select("id"), "id", "left_anti")
+            .collect()
+        ]
+    removed = net.removed + demoted
     out["removes"] = len(removed)
     if removed:
         index.remove(removed)
-    out["upserts"] = upserts.count() - len(demoted)
+    out["upserts"] = len(net.upsert_ids) - len(demoted)
     if out["upserts"]:
         index.add(upserts, mode=mode)
     _advance_cursor(index, table, to_v)
@@ -357,6 +377,16 @@ def sync_search_plane(
     The combined pin is persisted next to the sync cursors
     (crash-safe tmp+rename) for :func:`latest_plane_pin`.
 
+    The window's net change-set (the CDF diff, its checkpoint and
+    the id collect) is built ONCE and handed to both index syncs
+    whenever the two resolved cursors name the same window — the
+    normal case. When they differ (a crash between the two syncs left
+    one cursor behind) or the indexes key on different id columns,
+    each index derives its own window: the postings before-image hint
+    must describe what THAT index holds. The postings side applies
+    its window as one removal pass plus one insert (see
+    :func:`sync_postings_from_table`).
+
     Returns ``{"table_version", "lexical", "vector", "pin"}`` where
     ``pin`` goes straight into ``hybrid_search_indexed(at=...)``."""
     cur = table.current_version()
@@ -365,11 +395,27 @@ def sync_search_plane(
             f"table at {table.path} has no commits to sync from"
         )
     to_v = cur if to_version is None else to_version
+    from_lex, from_vec = (
+        (from_version, from_version)
+        if from_version is not None
+        else (sync_cursor(postings_index, table),
+              sync_cursor(ivf_index, table))
+    )
+    net = None
+    if (
+        from_lex is not None
+        and from_lex == from_vec
+        and from_lex != to_v
+        and postings_index.id_col == ivf_index.id_col
+    ):
+        net = _net_changes(table, from_lex, to_v, postings_index.id_col)
     lex = sync_postings_from_table(
-        postings_index, table, from_version, to_v, mode
+        postings_index, table, from_lex, to_v, mode, _net=net
     )
     lex_pin = postings_index.snapshot()
-    vec = sync_ivf_from_table(ivf_index, table, from_version, to_v, mode)
+    vec = sync_ivf_from_table(
+        ivf_index, table, from_vec, to_v, mode, _net=net
+    )
     vec_pin = ivf_index.snapshot()
     pin = {"lexical": lex_pin, "vector": vec_pin}
     p = _plane_pin_path(postings_index, ivf_index, table)

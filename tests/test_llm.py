@@ -3959,19 +3959,25 @@ def test_project_embeddings_passthrough_columns(spark):
 
 
 @pytest.mark.slow
-def test_sync_search_plane_combined_pin(spark, tmp_path):
+def test_sync_search_plane_combined_pin(spark, tmp_path, monkeypatch):
     """The coordinated search-plane snapshot (r11 verdict #5): one
     call advances BOTH indexes to the same table version and returns
     a combined pin; a hybrid serve at that pin equals the RRF fusion
     of the two individually-pinned sides, stays frozen while both
     indexes keep mutating underneath, and the latest pin is readable
-    from disk. Mixing the combined pin with per-side pins errors."""
+    from disk. Mixing the combined pin with per-side pins errors.
+
+    With agreeing cursors each call diffs the table ONCE for both
+    indexes; with the IVF cursor held a window behind (a crash between
+    the two index syncs) each index diffs its own window, and both
+    serve what a fresh bootstrap at the same table version serves."""
     from datalake_toolkit_spark.lakehouse import LakeTable
     from datalake_toolkit_spark.llm import (
         IVFIndex,
         PostingsIndex,
         hybrid_search_indexed,
         latest_plane_pin,
+        sync_postings_from_table,
         sync_search_plane,
     )
     from datalake_toolkit_spark.llm.search import rrf_fuse
@@ -3998,6 +4004,14 @@ def test_sync_search_plane_combined_pin(spark, tmp_path):
     with pytest.warns(UserWarning, match="non-empty index"):
         r0 = sync_search_plane(pidx, ivf, t)
     assert r0["table_version"] == t.current_version()
+    calls = []
+    changes = LakeTable.changes
+
+    def counted(self, *a, **kw):
+        calls.append(a)
+        return changes(self, *a, **kw)
+
+    monkeypatch.setattr(LakeTable, "changes", counted)
 
     queries = spark.createDataFrame(
         [(100, "w1 common", vec(2)), (101, "w3 w4", vec(7))],
@@ -4025,6 +4039,7 @@ def test_sync_search_plane_combined_pin(spark, tmp_path):
     )
     t.delete_where("doc_id = 3", mode="mor")
     r1 = sync_search_plane(pidx, ivf, t)
+    assert len(calls) == 1  # one change-set for both indexes
     pin1 = r1["pin"]
     at_pin1 = serve(at=pin1)
     # the combined pin must equal fusing the two individually-pinned
@@ -4064,6 +4079,7 @@ def test_sync_search_plane_combined_pin(spark, tmp_path):
         mode="mor",
     )
     r2 = sync_search_plane(pidx, ivf, t)
+    assert len(calls) == 2
     assert serve(at=pin1) == at_pin1  # frozen
     live = serve(at=r2["pin"])
     assert live != at_pin1  # the world really moved
@@ -4077,6 +4093,205 @@ def test_sync_search_plane_combined_pin(spark, tmp_path):
         serve(at=pin1, at_lexical=pin1["lexical"])
     with pytest.raises(ValueError, match="lexical"):
         serve(at={"vector": pin1["vector"]})
+
+    # the IVF cursor held one window behind: each index its own window
+    schema = "doc_id bigint, text string, embedding array<double>"
+    t.upsert(spark.createDataFrame([(2, "w2 late edit", vec(13))], schema),
+             keys=["doc_id"], mode="mor")
+    sync_postings_from_table(pidx, t)  # the IVF sync never ran
+    t.upsert(spark.createDataFrame([(31, "w3 common new", vec(5))], schema),
+             keys=["doc_id"], mode="mor")
+    t.delete_where("doc_id = 4", mode="mor")
+    calls.clear()
+    r3 = sync_search_plane(pidx, ivf, t)
+    assert len(calls) == 2
+    assert r3["lexical"]["from_version"] != r3["vector"]["from_version"]
+    monkeypatch.undo()
+    ref_p = PostingsIndex(spark, str(tmp_path / "rp"), prefix_len=1)
+    ref_v = IVFIndex(
+        spark, str(tmp_path / "rv"), id_col="doc_id", vec_col="embedding"
+    ).build(
+        t.read().select("doc_id", "embedding"), n_lists=4, lloyd_iters=1,
+        dim=8,
+    )
+    with pytest.warns(UserWarning, match="non-empty index"):
+        sync_search_plane(ref_p, ref_v, t)
+    qv = queries.select(
+        F.col("query_id").alias("doc_id"), F.col("query_vec").alias("embedding")
+    )
+    for a, b in ((pidx, ref_p), (ivf, ref_v)):
+        assert not [r for r in a.audit().collect() if r.n_violations]
+        if a is pidx:  # k and n_probe cover everything: no tie order
+            got, want = (
+                {(r.query_id, r.doc_id, r.score) for r in x.search_bm25(
+                    queries.select("query_id", "query_text"), k=40
+                ).collect()}
+                for x in (a, b)
+            )
+        else:
+            got, want = (
+                {(r.qid, r.cid, r.cosine)
+                 for r in x.search(qv, k=40, n_probe=4).collect()}
+                for x in (a, b)
+            )
+        assert got == want
+
+
+def _assert_matches_rebuild(spark, idx, table, path):
+    """``idx``'s postings and doc_stats equal a fresh index built from
+    the table's current snapshot, and the deep audit is clean: term
+    stats live-fresh and equal to a recompute from those postings,
+    corpus stats equal to a recompute from those doc_stats."""
+    from datalake_toolkit_spark.llm import PostingsIndex
+
+    ref = PostingsIndex(spark, path, prefix_len=idx._prefix_len())
+    ref.add(table.read().select("doc_id", "text"))
+    for name, cols in (
+        ("postings_t", ("term", "doc_id", "tf", "dl", "positions")),
+        ("doc_stats_t", ("doc_id", "dl", "dhash_prefix")),
+    ):
+        got, want = (
+            sorted(map(tuple, getattr(x, name).read().select(*cols).collect()))
+            for x in (idx, ref)
+        )
+        assert got == want, name
+    # raises unless the term stats are live-fresh
+    bad = [
+        r for r in idx.audit(verify_term_stats=True).collect()
+        if r.n_violations
+    ]
+    assert bad == []
+
+
+def test_sync_window_is_one_removal_pass(spark, tmp_path):
+    """A CDF window's net deletes and replaced ids are applied in ONE
+    removal pass (one predicate delete per table) — windows with only
+    deletes, only edits, and both, including a deleted doc whose terms
+    all reappear in the window's new texts — and after each window
+    postings, doc_stats, corpus_stats and term_stats equal a rebuild
+    from the table snapshot, with pruning still live."""
+    from datalake_toolkit_spark.lakehouse import LakeTable
+    from datalake_toolkit_spark.llm import (
+        PostingsIndex,
+        sync_postings_from_table,
+    )
+
+    schema = "doc_id bigint, text string"
+    t = LakeTable(spark, str(tmp_path / "t"))
+    t.write(
+        spark.createDataFrame(
+            [(1, "alpha beta gamma"), (2, "alpha beta"),
+             (3, "beta gamma delta"), (4, "gamma delta"), (5, "alpha"),
+             (6, "epsilon zeta")],
+            schema,
+        )
+    )
+    idx = PostingsIndex(spark, str(tmp_path / "p"), prefix_len=1)
+    sync_postings_from_table(idx, t)
+    deletes = {"postings_t": 0, "doc_stats_t": 0}
+    for name in deletes:
+        tbl = getattr(idx, name)
+
+        def counted(*a, _orig=tbl.delete_where, _name=name, **kw):
+            deletes[_name] += 1
+            return _orig(*a, **kw)
+
+        tbl.delete_where = counted
+
+    windows = [
+        ("deletes only", [], "doc_id IN (2, 6)", (0, 2)),
+        ("edits only",
+         [(1, "alpha alpha delta"), (4, "gamma gamma delta epsilon")],
+         None, (2, 0)),
+        # doc 3's terms all reappear in doc 5's new text
+        ("deletes and edits",
+         [(5, "beta gamma delta alpha"), (7, "delta")],
+         "doc_id = 3", (2, 1)),
+    ]
+    for i, (what, upserts, pred, counts) in enumerate(windows):
+        if upserts:
+            t.upsert(spark.createDataFrame(upserts, schema),
+                     keys=["doc_id"], mode="mor")
+        if pred:
+            t.delete_where(pred, mode="mor")
+        for k in deletes:
+            deletes[k] = 0
+        out = sync_postings_from_table(idx, t)
+        assert (out["upserts"], out["removes"]) == counts, what
+        assert deletes == {"postings_t": 1, "doc_stats_t": 1}, what
+        _assert_matches_rebuild(spark, idx, t, str(tmp_path / f"ref{i}"))
+
+
+def test_crash_mid_replace_never_leaves_stats_fresh_while_stale(
+    spark, tmp_path, monkeypatch
+):
+    """A failure injected into the postings insert of a replace-add,
+    and of a sync window holding deletes and edits, must leave the
+    term stats either marked stale or exact — never stale-as-fresh
+    (over-counted df under-estimates the MAXSCORE bound and drops
+    true top-k hits) — and the pruned BM25 serve must equal the exact
+    one."""
+    from datalake_toolkit_spark.lakehouse import LakeTable
+    from datalake_toolkit_spark.llm import (
+        PostingsIndex,
+        sync_postings_from_table,
+    )
+
+    schema = "doc_id bigint, text string"
+    base = [(1, "alpha beta gamma"), (2, "alpha beta gamma"),
+            (3, "alpha beta gamma"), (4, "alpha"), (5, "alpha"),
+            (6, "alpha")]
+    queries = spark.createDataFrame(
+        [(0, "alpha beta"), (1, "gamma")],
+        "query_id bigint, query_text string",
+    )
+
+    def boom(*a, **kw):
+        raise RuntimeError("injected crash")
+
+    def check_reopened(path):
+        idx = PostingsIndex(spark, path, prefix_len=1)
+        if idx._stats_fresh():
+            stored = {
+                r.term: r.df
+                for r in idx.term_stats_t.read().collect() if r.df
+            }
+            truth = {
+                r.term: r["count"]
+                for r in idx.postings_t.read().groupBy("term").count()
+                .collect()
+            }
+            assert stored == truth
+        pruned = sorted(map(tuple, idx.search_bm25(queries, k=4).collect()))
+        exact = sorted(
+            map(tuple, idx.search_bm25(queries, k=4, prune="off").collect())
+        )
+        assert pruned == exact
+
+    # replace-add over an equal vocabulary
+    path = str(tmp_path / "add")
+    idx = PostingsIndex(spark, path, prefix_len=1)
+    idx.add(spark.createDataFrame(base, schema))
+    monkeypatch.setattr(idx.postings_t, "upsert", boom)
+    with pytest.raises(RuntimeError, match="injected"):
+        idx.add(spark.createDataFrame(base[:3], schema), replace=True)
+    monkeypatch.undo()
+    check_reopened(path)
+
+    # a sync window with a delete and an edit sharing every term
+    t = LakeTable(spark, str(tmp_path / "t"))
+    t.write(spark.createDataFrame(base, schema))
+    path = str(tmp_path / "sync")
+    idx = PostingsIndex(spark, path, prefix_len=1)
+    sync_postings_from_table(idx, t)
+    t.upsert(spark.createDataFrame([(1, "gamma beta alpha alpha")], schema),
+             keys=["doc_id"], mode="mor")
+    t.delete_where("doc_id = 2", mode="mor")
+    monkeypatch.setattr(idx.postings_t, "upsert", boom)
+    with pytest.raises(RuntimeError, match="injected"):
+        sync_postings_from_table(idx, t)
+    monkeypatch.undo()
+    check_reopened(path)
 
 
 def test_decontaminate_indexed_slop_and_pin(spark, tmp_path):
